@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -115,13 +115,20 @@ object CdcQueries {
   }
 
   // ---------------------------------------------------------------- A4
+  /** The latest-state output shape shared by A4 and every streaming
+    * latest-state query: one row per live key, `ts` (default: the
+    * runners' `tsMicros`) formatted as `last_ts`, ordered by user. */
+  private def latestRows(latest: DataFrame,
+      ts: Column = timestamp_micros(col("tsMicros"))): DataFrame =
+    latest.select(col("key").as("user_id"), col("event_type").as("last_event_type"),
+        col("value").as("last_value"), col("seq").as("last_seq"),
+        date_format(ts, tsFmt).as("last_ts"))
+      .orderBy(col("user_id"))
+
   def latestState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    ApplyChanges.latest(ChangeFeed.fromEvents(s, dir), Seq("key"), Seq("seq"))
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format($"ts", tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    latestRows(ApplyChanges.latest(ChangeFeed.fromEvents(s, dir), Seq("key"), Seq("seq")),
+      $"ts")
   }
 
   // ---------------------------------------------------------------- A5
@@ -171,7 +178,10 @@ object CdcQueries {
     raw.withColumn("ts", graft.Tables.eventTs(schema("ts").dataType))
   }
 
-  private def changeStream(s: SparkSession, dir: String): Dataset[ChangeRecord] = {
+  /** The events feed as a bounded [[ChangeRecord]] stream: the
+    * [[rawEventStream]] read (layout-aware, event-time guarded) with
+    * the batch synthesis's well-formedness filter and op mapping. */
+  private[graft] def changeStream(s: SparkSession, dir: String): Dataset[ChangeRecord] = {
     import s.implicits._
     // same well-formedness predicate as the batch synthesis — the
     // framing fields are mandatory on the wire (ChangeFeed contract)
@@ -184,14 +194,8 @@ object CdcQueries {
       .as[ChangeRecord]
   }
 
-  def streamUpserts(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    CdcStream.runLatestStateBounded(s, changeStream(s, dir))
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
-  }
+  def streamUpserts(s: SparkSession, dir: String): DataFrame =
+    latestRows(CdcStream.runLatestStateBounded(s, changeStream(s, dir)))
 
   // ---------------------------------------------------------------- A8
   def streamWindowed(s: SparkSession, dir: String): DataFrame = {
@@ -398,16 +402,13 @@ object CdcQueries {
     * up without restarting the stream. */
   def streamEnrich(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val name = "graft_enrich_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val cust = graft.Tables.table(s, dir, "customer")
       .select($"c_custkey", $"c_name", $"c_mktsegment")
     val enriched = rawEventStream(s, dir)
       .select($"event_id", $"user_id", $"event_type", $"value")
       .join(broadcast(cust), $"user_id" === $"c_custkey")
-    val q = enriched.writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name)
+    CdcStream.runToMemorySink(s, enriched,
+        org.apache.spark.sql.streaming.OutputMode.Append, "graft_enrich_")
       .select($"event_id", $"user_id", $"c_name", $"c_mktsegment", $"value")
       .orderBy($"event_id")
   }
@@ -1013,11 +1014,7 @@ object CdcQueries {
         element_at($"d.cells", 3).cast("double").as("value"),
         coalesce(element_at($"d.cells", 4).cast("long"), lit(0L)).as("tsMicros"))
       .as[ChangeRecord]
-    CdcStream.runLatestStateBounded(s, decoded)
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    latestRows(CdcStream.runLatestStateBounded(s, decoded))
   }
 
   // --------------------------------------------------------------- A23
@@ -1069,11 +1066,7 @@ object CdcQueries {
         coalesce(ChangeEventFiles.typedCell($"after", "ts_us", "bigint"),
           lit(0L)).as("tsMicros"))
       .as[ChangeRecord]
-    CdcStream.runLatestStateBounded(s, decoded)
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    latestRows(CdcStream.runLatestStateBounded(s, decoded))
   }
 
   // --------------------------------------------------------------- A24
@@ -1148,11 +1141,7 @@ object CdcQueries {
         $"after.value".as("value"),
         coalesce($"after.ts_us", lit(0L)).as("tsMicros"))
       .as[ChangeRecord]
-    CdcStream.runLatestStateBounded(s, decoded)
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    latestRows(CdcStream.runLatestStateBounded(s, decoded))
   }
 
   // --------------------------------------------------------------- A34
@@ -1231,11 +1220,21 @@ object CdcQueries {
         $"r.event_type".as("event_type"), $"r.value".as("value"),
         $"r.ts_us".as("tsMicros"))
       .as[ChangeRecord]
-    CdcStream.runLatestStateBounded(s, decoded)
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    latestRows(CdcStream.runLatestStateBounded(s, decoded))
+  }
+
+  /** The batch change feed as a deterministic 2-micro-batch stream,
+    * split at the median LSN (shared by A26/A27). An empty feed gives
+    * cut 0: two empty batches, an empty table. */
+  private def twoBatchChangeStream(s: SparkSession, dir: String,
+      tag: String): Dataset[ChangeRecord] = {
+    import s.implicits._
+    val changes = ChangeFeed.fromEvents(s, dir)
+      .select($"key", $"seq", $"op", $"event_type", $"value",
+        expr("unix_micros(ts)").as("tsMicros"))
+    val cut = changes.agg(floor(max($"seq") / 2).cast("long"))
+      .as[Option[Long]].head().getOrElse(0L)
+    CdcStream.stagedStream(changes, "seq", Seq(cut), tag, 1).as[ChangeRecord]
   }
 
   // --------------------------------------------------------------- A26
@@ -1250,72 +1249,6 @@ object CdcQueries {
     * by the v1 write. The feed-split scalar is bounded-harness prep;
     * the operator itself (snapshot write/read/join) is driver-free,
     * one key shuffle per side. */
-  /** Split the batch change feed into two seq-halves written as two
-    * parquet files under one scratch dir — a deterministic 2-micro-batch
-    * stream when read with maxFilesPerTrigger=1 (shared by A26/A27). */
-  private def twoBatchChangeStream(s: SparkSession, dir: String,
-      tag: String): Dataset[ChangeRecord] = {
-    import s.implicits._
-    val changes = ChangeFeed.fromEvents(s, dir)
-      .select($"key", $"seq", $"op", $"event_type", $"value",
-        expr("unix_micros(ts)").as("tsMicros"))
-    // Option decode: max() on an EMPTY feed is NULL and the bare Long
-    // decode crashed (r11 empty-input sweep); cut 0 -> two empty halves
-    // -> two empty batches -> empty table, the defined semantics
-    val cut = changes.agg(floor(max($"seq") / 2).cast("long"))
-      .as[Option[Long]].head().getOrElse(0L)
-    val inDir = graft.Scratch.dir(s"graft_${tag}_in")
-    // ONE write job for both halves (r16 — the r14 neardup staging
-    // shave ported): repartition by the half tag, partitionBy lands
-    // each half in its own dir, moves rename into arrival order. An
-    // empty half (empty feed) writes no partition dir — stage an
-    // empty single-file parquet so the stream still sees two files.
-    locally {
-      val tmp = graft.Scratch.dir(s"graft_${tag}_stage")
-      // null-seq rows are dropped EXPLICITLY (r16 ADVICE): the pre-r16
-      // per-half range filters (seq <= cut / seq > cut) silently dropped
-      // them from both halves, while the when-chain's otherwise() would
-      // route them into the last batch — a silent semantic change on a
-      // feed that ever carries null seqs (well-formed feeds never do:
-      // seq is framing-mandatory per the ChangeRecord contract).
-      // sortWithinPartitions($"seq") keeps within-file row order
-      // deterministic (r16 ADVICE: repartition replaced coalesce(1), so
-      // file order became shuffle-fetch order; latestWithTombstones
-      // breaks ties by seq only, so a duplicate (key, seq) in a feed
-      // would otherwise resolve nondeterministically).
-      changes.filter($"seq".isNotNull)
-        .withColumn("b", when($"seq" <= cut, "00").otherwise("01"))
-        .repartition($"b")
-        .sortWithinPartitions($"seq")
-        .write.mode("overwrite").partitionBy("b").parquet(tmp.toString)
-      Seq("00", "01").zipWithIndex.foreach { case (name, i) =>
-        val dst = inDir.resolve(s"$name.parquet")
-        val srcDir = tmp.resolve(s"b=$name")
-        if (java.nio.file.Files.isDirectory(srcDir))
-          java.nio.file.Files.move(graft.Scratch.onlyParquet(srcDir), dst)
-        else {
-          val e = graft.Scratch.dir(s"graft_${tag}_empty_$name")
-          changes.limit(0).coalesce(1).write.mode("overwrite")
-            .parquet(e.toString)
-          java.nio.file.Files.move(graft.Scratch.firstParquet(e), dst)
-        }
-        // both halves leave ONE write job with tied mtimes, and batch
-        // ORDER is the whole point of the 2-batch stream (v0 = first
-        // half) — pin strictly increasing mtimes (the ingest/neardup
-        // convention) so FileStreamSource can't tie-reorder
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-      }
-    }
-    val schema = StructType(Seq(
-      StructField("key", LongType), StructField("seq", LongType),
-      StructField("op", StringType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("tsMicros", LongType)))
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      .as[ChangeRecord]
-  }
-
   def timeTravel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val stream = twoBatchChangeStream(s, dir, "tt")
@@ -1464,11 +1397,7 @@ object CdcQueries {
     val horizon = ChangeFeed.fromEvents(s, dir)
       .agg(max($"seq")).as[Option[Long]].head().getOrElse(0L)
     graft.sinks.PartitionedTable.compact(s, table, Buckets, horizon)
-    graft.sinks.PartitionedTable.readLatest(s, table, Buckets)
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    latestRows(graft.sinks.PartitionedTable.readLatest(s, table, Buckets))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

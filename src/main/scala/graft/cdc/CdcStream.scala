@@ -22,6 +22,16 @@ case class ChangeRecord(key: Long, seq: Long, op: String,
   * Kafka+Debezium; here the bounded file source stands in, which is
   * exactly how Structured Streaming treats a backfill anyway.
   *
+  * It also owns the bounded-stream harness every streaming runner is
+  * built on, each piece written once:
+  *   - [[stagedStream]] splits a batch feed into cut-ordered files and
+  *     returns the `maxFilesPerTrigger` reader over them;
+  *   - [[assertEventTimeSane]] is the event-time guard on a feed;
+  *   - [[withStatePartitions]] scopes the state-store conf to one run;
+  *   - [[runToMemorySink]] starts, drains (with an optional
+  *     between-drains step, e.g. the sentinel publish of
+  *     [[runPunctuatedAppend]]) and stops a memory-sink query.
+  *
   * Scale: state lives in the state store keyed by `key` (RocksDB on a
   * real cluster); each micro-batch shuffles only that batch's changes.
   */
@@ -108,18 +118,70 @@ object CdcStream {
 
   /** Shared bounded-run scaffold: start `df` into a uniquely-named
     * memory sink under [[StatePartitions]], drain, stop, and return
-    * the sink table — the sequence every bounded runner repeats
-    * (factored in r10; a drain-behavior fix now lands in one place). */
-  private def runToMemorySink(spark: SparkSession, df: DataFrame,
+    * the sink table. When `betweenDrains` is given it runs after the
+    * first drain and is followed by a second one — the end-of-stream
+    * punctuation of [[runPunctuatedAppend]]. */
+  private[cdc] def runToMemorySink(spark: SparkSession, df: DataFrame,
       mode: OutputMode, prefix: String,
-      provider: String = RocksProvider): DataFrame = {
+      provider: String = RocksProvider,
+      betweenDrains: Option[() => Unit] = None): DataFrame = {
     val name = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
     withStatePartitions(spark, provider) {
       val q = df.writeStream
         .outputMode(mode).format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+      try {
+        q.processAllAvailable()
+        betweenDrains.foreach { step => step(); q.processAllAvailable() }
+      } finally q.stop()
     }
     spark.table(name)
+  }
+
+  /** Stage `df` as one parquet file per batch and return a stream over
+    * them that admits `filesPerTrigger` files per micro-batch. Batch i
+    * holds the rows whose `key` lies in (cuts(i-1), cuts(i)] (batch 0
+    * has no lower bound); the last batch holds the rest. Null keys are
+    * dropped: no cut can place them.
+    *
+    * All batches are written by ONE job — repartition by the batch tag
+    * gives one writer task, and so one file, per batch; sorting by
+    * (tag, key) keeps the within-file order deterministic whatever the
+    * writer's own sort does. An empty batch writes no partition dir,
+    * so it is staged as an empty placeholder file and the stream still
+    * sees one file per batch. FileStreamSource admits files in mtime
+    * order, so each file's mtime is pinned strictly increasing: batch
+    * order is load-bearing for every caller, and one job's files would
+    * otherwise tie. The reader is built on `df`'s own schema. */
+  private[graft] def stagedStream(df: DataFrame, key: String, cuts: Seq[Long],
+      tag: String, filesPerTrigger: Int): DataFrame = {
+    val k = col(key)
+    val data = df.filter(k.isNotNull)
+    val batchOf = cuts.zipWithIndex.foldRight(lit(cuts.size)) {
+      case ((cut, i), later) => when(k <= cut, i).otherwise(later)
+    }
+    val tmp = graft.Scratch.dir(s"graft_${tag}_stage")
+    data.withColumn("__b", batchOf)
+      .repartition(col("__b"))
+      .sortWithinPartitions(col("__b"), k)
+      .write.mode("overwrite").partitionBy("__b").parquet(tmp.toString)
+    val inDir = graft.Scratch.dir(s"graft_${tag}_in")
+    (0 to cuts.size).foreach { i =>
+      val written = tmp.resolve(s"__b=$i")
+      val src =
+        if (java.nio.file.Files.isDirectory(written)) written
+        else {
+          val e = graft.Scratch.dir(s"graft_${tag}_empty")
+          data.limit(0).coalesce(1).write.mode("overwrite").parquet(e.toString)
+          e
+        }
+      val dst = inDir.resolve(f"$i%02d.parquet")
+      java.nio.file.Files.move(graft.Scratch.onlyParquet(src), dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
+    }
+    df.sparkSession.readStream.schema(data.schema)
+      .option("maxFilesPerTrigger", filesPerTrigger.toString)
+      .parquet(inDir.toString)
   }
 
   /** Latest-state upserts via flatMapGroupsWithState (Update mode).
@@ -283,68 +345,82 @@ object CdcStream {
         })
   }
 
-  /** Guard against the silent unit-scale failure class: a feed whose
-    * declared schema misreads the on-disk int64 (nanos vs micros)
-    * yields event-times around 1970, and every window/join collapses
-    * while row counts stay plausible (round-8 postmortem). Re-read the
-    * feed in BATCH with the SAME declared schema + normalization and
-    * require its min event-time to be post-2000 — cheap (one small
-    * agg) and it turns silent garbage into a named failure. */
   /** Min `ts` in MICROS from the parquet FOOTER statistics of every
-    * data file under `path` (r17, guide §6: the sanity guard below ran
-    * a full-feed min-aggregation JOB for every streaming runner on
-    * every bench run — column-chunk min/max answer the same question
-    * from metadata on the driver). Returns None when any chunk lacks
-    * trustworthy stats (caller falls back to the Spark agg);
-    * Some(None) for an empty/all-null feed; Some(Some(micros))
-    * otherwise. The unit normalization mirrors
-    * [[graft.Tables.eventTsMicros]]: a LongType feed stores nanos
-    * (div 1000), the timestamp types store micros. */
+    * data file under `path` — column-chunk min/max answer the guard's
+    * question from metadata on the driver, with no Spark job. Returns
+    * None when the footers cannot answer and the caller must scan:
+    * a chunk lacks trustworthy stats, the feed dir is nested or
+    * partitioned (its data files sit below the top level), or a file
+    * stores `ts` in a unit other than the declared type's. Some(None)
+    * for an empty/all-null feed; Some(Some(micros)) otherwise. The unit
+    * rule mirrors [[graft.Tables.eventTsMicros]]: a LongType feed is
+    * plain int64 nanos (div 1000); a timestamp type must be annotated
+    * TIMESTAMP(MICROS). */
   private def minTsMicrosFromFooters(spark: SparkSession, path: String,
       tsType: org.apache.spark.sql.types.DataType): Option[Option[Long]] = try {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation => LTA}
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
-    val files =
+    val entries =
       if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-      else Seq(p)
-    var min: Option[Long] = None
-    var trusted = true
-    files.foreach { f =>
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try {
-        val blocks = rdr.getFooter.getBlocks
-        blocks.forEach { b =>
-          if (trusted && b.getRowCount > 0) {
-            val col = b.getColumns.asScala
-              .find(_.getPath.toDotString == "ts").orNull
-            val st = if (col == null) null else col.getStatistics
-            if (st != null && st.hasNonNullValue) {
-              val v = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-              min = Some(min.fold(v)(math.min(_, v)))
-            } else if (st == null || !st.isNumNullsSet ||
-                st.getNumNulls < b.getRowCount) {
-              // stats absent (vs a genuinely all-null chunk) — the
-              // metadata cannot answer; the caller must scan
-              trusted = false
+        fs.listStatus(p).toSeq.filterNot { st =>
+          val n = st.getPath.getName
+          n.startsWith(".") || n.startsWith("_")
+        }
+      else Seq(fs.getFileStatus(p))
+    if (entries.exists(_.isDirectory)) None
+    else {
+      var min: Option[Long] = None
+      var trusted = true
+      entries.map(_.getPath).filter(_.getName.endsWith(".parquet")).foreach { f =>
+        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        try {
+          val footer = rdr.getFooter
+          val unit = footer.getFileMetaData.getSchema.getFields.asScala
+            .find(_.getName == "ts").map(_.getLogicalTypeAnnotation).orNull
+          val toMicros: Option[Long => Long] = (tsType, unit) match {
+            case (LongType, null) => Some(_ / 1000) // raw nanos feed (legacy read)
+            case (LongType, _) => None
+            case (_, t: LTA.TimestampLogicalTypeAnnotation)
+                if t.getUnit == LTA.TimeUnit.MICROS => Some(identity)
+            case _ => None
+          }
+          if (toMicros.isEmpty) trusted = false
+          footer.getBlocks.forEach { b =>
+            if (trusted && b.getRowCount > 0) {
+              val col = b.getColumns.asScala
+                .find(_.getPath.toDotString == "ts").orNull
+              val st = if (col == null) null else col.getStatistics
+              if (st != null && st.hasNonNullValue) {
+                val v = toMicros.get(
+                  st.genericGetMin.asInstanceOf[java.lang.Long].longValue())
+                min = Some(min.fold(v)(math.min(_, v)))
+              } else if (st == null || !st.isNumNullsSet ||
+                  st.getNumNulls < b.getRowCount) {
+                // stats absent (vs a genuinely all-null chunk) — the
+                // metadata cannot answer; the caller must scan
+                trusted = false
+              }
             }
           }
-        }
-      } finally rdr.close()
+        } finally rdr.close()
+      }
+      if (trusted) Some(min) else None
     }
-    if (!trusted) None
-    else Some(min.map(v => tsType match {
-      case LongType => v / 1000 // raw nanos feed (legacy read)
-      case _ => v
-    }))
   } catch { case _: Exception => None }
 
   /** 2000-01-01T00:00:00Z in epoch micros — the sanity floor. */
   private val Year2000Micros = 946684800000000L
 
+  /** Guard against the silent unit-scale failure class: a feed whose
+    * declared schema misreads the on-disk int64 (nanos vs micros)
+    * yields event-times around 1970, and every window/join collapses
+    * while row counts stay plausible. Require the feed's min event-time
+    * under the declared schema + normalization to be post-2000, read
+    * from the footers when they can answer, else by a batch scan — it
+    * turns silent garbage into a named failure. */
   private[cdc] def assertEventTimeSane(spark: SparkSession, path: String,
       schema: StructType): Unit = {
     val tsType = schema("ts").dataType
@@ -369,13 +445,15 @@ object CdcStream {
         " (pre-2000) — ts unit/schema mismatch; see Tables.eventTsMicros")
   }
 
-  /** Write the 1-row end-of-stream sentinel parquet with parquet-java
-    * (no Spark job — see the call site). The ts column carries the
-    * FEED's physical representation: plain int64 nanos for a LongType
-    * feed, TIMESTAMP(MICROS) with the matching isAdjustedToUTC flag
-    * for the timestamp feeds — exactly what the old
-    * `lit(...).write.parquet` produced for each branch of the declared
-    * schema. */
+  /** Publish the 1-row end-of-stream sentinel parquet at `dst`, written
+    * with parquet-java (a constant row needs no Spark write job). The
+    * ts column carries the FEED's physical representation: plain int64
+    * nanos for a LongType feed, TIMESTAMP(MICROS) with the matching
+    * isAdjustedToUTC flag for the timestamp feeds — so the declared read
+    * schema decodes it like a Spark-written row. `dst` may sit in a live
+    * FileStreamSource dir, whose background trigger would pick up a
+    * half-written file: the bytes go to a dot-prefixed name the source
+    * ignores, and one atomic rename publishes the finished file. */
   private[cdc] def writeSentinelFile(dst: java.nio.file.Path,
       tsType: org.apache.spark.sql.types.DataType): Unit = {
     import org.apache.parquet.schema.{MessageType, Types}
@@ -397,9 +475,10 @@ object CdcStream {
       Types.required(BINARY).as(LTA.stringType()).named("props"))
     val conf = new org.apache.hadoop.conf.Configuration()
     org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
+    val tmp = dst.resolveSibling("." + dst.getFileName)
     val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(new org.apache.hadoop.fs.Path(dst.toUri), conf))
+        .fromPath(new org.apache.hadoop.fs.Path(tmp.toUri), conf))
       .withConf(conf)
       .build()
     val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
@@ -413,6 +492,7 @@ object CdcStream {
     g.add("value", 0.0)
     g.add("props", "{}")
     try w.write(g) finally w.close()
+    java.nio.file.Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Run a watermarked APPEND-mode streaming aggregation over the
@@ -472,28 +552,13 @@ object CdcStream {
       stage(src, "000000_events.parquet")
     }
     assertEventTimeSane(spark, inDir.toString, schema)
-    val name = "graft_punct_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val agg = build(spark.readStream.schema(schema)
       .parquet(inDir.toString)
       .withColumn("ts", graft.Tables.eventTs(tsType)))
-    withStatePartitions(spark) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Append).format("memory").queryName(name).start()
-      try {
-        q.processAllAvailable()
-        // sentinel ts must carry the FILE's representation (2100-01-01).
-        // Written with parquet-java directly (r17, r16 verdict task 3):
-        // the 1-row sentinel was a full Spark write JOB (plan + schedule
-        // + commit protocol, ~0.15 s × 4 punctuated runners per bench
-        // run) for a constant row — a driver-side file write needs none
-        // of that. Same bytes semantically: the declared read schema is
-        // per-column name/type-matched, so the stream decodes the
-        // sentinel identically to the old Spark-written file.
-        writeSentinelFile(inDir.resolve("01_sentinel.parquet"), tsType)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table(name)
+    // sentinel ts carries the FILE's representation (2100-01-01)
+    runToMemorySink(spark, agg, OutputMode.Append, "graft_punct_",
+      betweenDrains = Some(() =>
+        writeSentinelFile(inDir.resolve("01_sentinel.parquet"), tsType)))
   }
 
   /** Streaming tumbling-window aggregate (1h) per event_type:

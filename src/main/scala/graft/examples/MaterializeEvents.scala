@@ -1,10 +1,8 @@
 package graft.examples
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.cdc.ChangeRecord
+import graft.cdc.CdcQueries
 import graft.sinks.MaterializedTable
 
 /** End-to-end example: consume the events table as a bounded change
@@ -24,18 +22,9 @@ object MaterializeEvents {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    // declared schema resolved from the parquet footer; ts normalized
-    // to micros whatever the on-disk representation (Tables.eventTs)
-    val schema = graft.Tables.eventsSchema(spark, sfDir)
-    val changes = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .withColumn("ts", graft.Tables.eventTs(schema("ts").dataType))
-      .select($"user_id".as("key"), $"event_id".as("seq"),
-        when($"event_type" === "signup", "i")
-          .when($"event_type" === "error", "d").otherwise("u").as("op"),
-        $"event_type", $"value", unix_micros($"ts").as("tsMicros"))
-      .as[ChangeRecord]
+    // the registered streaming queries' feed read: either events
+    // layout, well-formed rows only, event-time guarded
+    val changes = CdcQueries.changeStream(spark, sfDir)
 
     val q = MaterializedTable.upsertSink(changes, tableDir, ckptDir)
     try q.processAllAvailable() finally q.stop()

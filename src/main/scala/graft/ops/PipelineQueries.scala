@@ -499,7 +499,6 @@ object PipelineQueries {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val feed = Dedup.dupFeed(s, dir)
-    val inDir = graft.Scratch.dir("graft_ingest_in")
     // Option decode: max() on an EMPTY feed is NULL, and the bare
     // .as[Long] decode crashed with NOT_NULL_ASSERT_VIOLATION (r11
     // empty-input sweep). 0 cuts make every batch empty → the stream
@@ -507,53 +506,12 @@ object PipelineQueries {
     val maxBase = feed.filter($"doc_id" < Dedup.DupShift)
       .agg(max($"doc_id")).as[Option[Long]].head().getOrElse(0L)
     val (cut1, cut2) = (maxBase / 3, 2 * maxBase / 3)
-    // stage all four batch files in ONE write job (r16 — the r14
-    // neardup floor shave ported: four serialized coalesce(1) jobs
-    // were ~0.8 s of this runner's sf0.1 floor): repartition by the
-    // batch tag gives one writer task per tag, partitionBy lands each
-    // tag in its own dir, and the moves rename them into arrival order
-    locally {
-      val tmp = graft.Scratch.dir("graft_ingest_stage")
-      // null-doc_id rows dropped EXPLICITLY (r16 ADVICE): the pre-r16
-      // per-batch range filters silently dropped them from every batch,
-      // while the when-chain's otherwise() would route them into the
-      // last batch — preserve the range-filter semantics by name.
-      feed.filter($"doc_id".isNotNull)
-        .withColumn("b",
-          when($"doc_id" <= cut1, "00")
-            .when($"doc_id" > cut1 && $"doc_id" <= cut2, "01")
-            .when($"doc_id" > cut2 && $"doc_id" < Dedup.DupShift, "02")
-            .otherwise("03"))
-        .repartition($"b")
-        .write.mode("overwrite").partitionBy("b").parquet(tmp.toString)
-      Seq("00", "01", "02", "03").zipWithIndex.foreach { case (name, i) =>
-        val dst = inDir.resolve(s"$name.parquet")
-        val srcDir = tmp.resolve(s"b=$name")
-        if (java.nio.file.Files.isDirectory(srcDir))
-          java.nio.file.Files.move(graft.Scratch.onlyParquet(srcDir), dst)
-        else {
-          // an empty slice writes no partition dir (empty corpus /
-          // degenerate cuts — r11 empty-input sweep): stage an empty
-          // single-file parquet so the stream still sees four files
-          val e = graft.Scratch.dir(s"graft_ingest_empty_$name")
-          feed.limit(0).coalesce(1).write.mode("overwrite").parquet(e.toString)
-          java.nio.file.Files.move(graft.Scratch.firstParquet(e), dst)
-        }
-        // batch order is load-bearing (first-seen == min doc_id) and
-        // FileStreamSource orders by mtime — pin a strictly increasing
-        // mtime so coarse-granularity filesystems can't tie/reorder
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-      }
-    }
     val tableDir = graft.Scratch.dir("graft_ingest_tbl").toString
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+    // four batches: three slices of the base docs, then every re-sent
+    // duplicate (doc_id >= DupShift); batch order is load-bearing
+    // (first-seen == min doc_id)
+    val q = graft.cdc.CdcStream.stagedStream(feed, "doc_id",
+        Seq(cut1, cut2, Dedup.DupShift - 1), "ingest", 1)
       .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         val sp = batch.sparkSession
         val gated = batch
@@ -686,58 +644,19 @@ object PipelineQueries {
     graft.functions.GraftExpressions.register(s)
     val docs = graft.Tables.table(s, dir, "documents")
       .select($"doc_id", $"text")
-    val inDir = graft.Scratch.dir("graft_neardup_in")
     // Option decode — empty corpus ⇒ 0 cuts ⇒ three empty batches ⇒
     // empty result (see pipelineStreamIngest; r11 empty-input sweep)
     val maxId = docs.agg(max($"doc_id")).as[Option[Long]].head().getOrElse(0L)
     val (cut1, cut2) = (maxId / 3, 2 * maxId / 3)
-    // stage all three batch files in ONE write job (r14 floor shave:
-    // three serialized coalesce(1) jobs were ~1/4 of the registered
-    // query's wall) — repartition by the batch tag gives one writer
-    // task per tag, partitionBy lands each tag in its own dir, and the
-    // moves rename them into arrival order
-    locally {
-      val tmp = graft.Scratch.dir("graft_neardup_stage")
-      // null-doc_id rows dropped explicitly; strict one-file move —
-      // same r16-ADVICE hardening as pipelineStreamIngest's staging
-      docs.filter($"doc_id".isNotNull)
-        .withColumn("b",
-          when($"doc_id" <= cut1, "00")
-            .when($"doc_id" <= cut2, "01").otherwise("02"))
-        .repartition($"b")
-        .write.mode("overwrite").partitionBy("b").parquet(tmp.toString)
-      Seq("00", "01", "02").zipWithIndex.foreach { case (name, i) =>
-        val dst = inDir.resolve(s"$name.parquet")
-        val srcDir = tmp.resolve(s"b=$name")
-        if (java.nio.file.Files.isDirectory(srcDir))
-          java.nio.file.Files.move(graft.Scratch.onlyParquet(srcDir), dst)
-        else {
-          // an empty slice writes no partition dir (empty corpus /
-          // degenerate cuts — r11 empty-input sweep): stage an empty
-          // single-file parquet so the stream still sees three files
-          val e = graft.Scratch.dir(s"graft_neardup_empty_$name")
-          docs.limit(0).coalesce(1).write.mode("overwrite").parquet(e.toString)
-          java.nio.file.Files.move(graft.Scratch.firstParquet(e), dst)
-        }
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-      }
-    }
     val histDir = graft.Scratch.dir("graft_neardup_hist").toString
     val keptDir = graft.Scratch.dir("graft_neardup_kept").toString
-    val inSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    // files-per-trigger is an explicit parameter (r13): the result is
+    // files-per-trigger is an explicit parameter: the result is
     // batch-cut-invariant BY DESIGN (SEEN policy above), so running
     // the same feed at 1 vs 3 files/trigger isolates per-micro-batch
     // fixed cost from data work without touching semantics --
     // StreamNeardupSpec asserts both land on the batch answer
-    val q = s.readStream.schema(inSchema)
-      .option("maxFilesPerTrigger", fpt.toString)
-      .parquet(inDir.toString)
+    val q = graft.cdc.CdcStream.stagedStream(docs, "doc_id",
+        Seq(cut1, cut2), "neardup", fpt)
       .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         val sp = batch.sparkSession
         val bsh = Dedup.shingleDocs(sp, batch)

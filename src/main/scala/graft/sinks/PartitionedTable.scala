@@ -154,11 +154,13 @@ object PartitionedTable {
           // NEXT batch's prior read (plus compact's snapshot read) pays
           // the listing + per-file open bill. One extra exchange of the
           // final (key-latest) rows clusters each bucket into one file.
-          // sortWithinPartitions keeps within-file order deterministic
-          // (the staging convention — r16 ADVICE).
+          // sortWithinPartitions keeps within-file order deterministic;
+          // the partition column leads the sort so the writer's own
+          // partitionBy sort is already satisfied and cannot reorder
+          // (the CdcStream.stagedStream convention).
           latestWithTombstones(all)
             .repartition(col("__b"))
-            .sortWithinPartitions(col("key"), col("seq"))
+            .sortWithinPartitions(col("__b"), col("key"), col("seq"))
             .write.partitionBy("__b")
             .mode("overwrite").parquet(s"$table/$version")
           writeManifest(s, table, s"m${batchId}_${System.currentTimeMillis()}",
